@@ -1,6 +1,13 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel,
+  UnresolvedRelation, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.{AlterViewAs, CreateView,
+  Filter, LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.execution.command.{CreateViewCommand, ExplainCommand}
+import org.apache.spark.sql.graft.ParsedSql
 
 /** Catalog/DDL surface — the Spark-native stand-in for the reference's
   * Nessie-catalog + MinIO-warehouse tier (SURVEY.md §1.1, §2.1 S2-S8):
@@ -50,32 +57,88 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $fqName")
 
   /** Ad-hoc SQL entry point (README.md:49-50, §3.3) — the full statement
-    * surface is whatever Spark SQL parses, plus the ref-addressed
-    * time-travel spellings ([[TimeTravel.rewrite]]: `FOR VERSION AS OF
-    * 'tag'` → [[Layout.readAt]], `"table@branch"` → the branch fork),
-    * the live-catalog `information_schema` shim ([[InfoSchema.rewrite]]
-    * — the Superset dataset-refresh introspection path), the CDC /
-    * maintenance verbs ([[TableFunctions.rewrite]]:
-    * `TABLE(system.table_changes(...))` → the changelog scan;
-    * `ALTER TABLE ... EXECUTE expire_snapshots(...)` →
-    * [[Layout.expireSnapshots]]), the Iceberg metadata tables
-    * ([[MetaSql.rewrite]]: `` `t$snapshots` `` / `$history` /
-    * `$refs` / `$files` answered from the manifest store), and
-    * `MERGE INTO` ([[MergeSql]]) and row-level `DELETE FROM` /
-    * `UPDATE ... SET` ([[DmlSql]]) — Spark's v1 parquet catalog refuses
-    * all three natively; the rewrites land them on the Layout commit
-    * machinery. */
+    * surface is whatever Spark SQL parses, plus:
+    *
+    *   - `MERGE INTO` ([[MergeSql]]) and row-level `DELETE FROM` /
+    *     `UPDATE ... SET` ([[DmlSql]]) — Spark's v1 parquet catalog
+    *     refuses all three natively; the routers land them on the Layout
+    *     commit machinery — and the maintenance verbs
+    *     ([[TableFunctions.maybeExecute]], [[AlterSql]], [[ShowStats]]);
+    *   - relations the engine serves itself, resolved in the parsed plan
+    *     before analysis: the ref-addressed time-travel spellings
+    *     (`FOR VERSION AS OF 'tag' | <seq>`, `FOR TIMESTAMP AS OF`,
+    *     `` `table@branch` `` — [[TimeTravel]]), the live-catalog
+    *     `information_schema` ([[InfoSchema]] — the Superset
+    *     dataset-refresh introspection path), the Iceberg metadata tables
+    *     (`` `t$snapshots` `` / `$history` / `$refs` / `$files` …
+    *     answered from the manifest store — [[MetaSql]]) and the
+    *     changelog `TABLE(system.table_changes(...))`
+    *     ([[TableFunctions.changes]]).
+    *
+    * The text is parsed once; a spelling inside a string literal is
+    * data, and the served relations live only inside the statement's own
+    * plan, so nothing is registered in the session. */
   def sql(spark: SparkSession, text: String): DataFrame =
     MergeSql.maybeExecute(spark, text)
       .orElse(DmlSql.maybeExecute(spark, text))
       .orElse(TableFunctions.maybeExecute(spark, text))
       .orElse(AlterSql.maybeExecute(spark, text))
       .orElse(ShowStats.maybeExecute(spark, text))
-      .getOrElse {
-        spark.sql(TimeTravel.rewrite(spark,
-          MetaSql.rewrite(spark,
-            TableFunctions.rewrite(spark, InfoSchema.rewrite(spark, text)))))
+      .getOrElse(ParsedSql.sql(spark, text)(served(spark)))
+
+  /** Substitute the engine-served relations in a parsed plan, in CTE
+    * bodies, EXPLAIN targets, view bodies and subqueries too. Top-down,
+    * so a filter directly above an `information_schema.columns` relation
+    * is seen before the relation and scopes its build
+    * ([[InfoSchema.columnsScope]]). */
+  private def served(spark: SparkSession)(plan: LogicalPlan): LogicalPlan = {
+    def named(parts: Seq[String], df: DataFrame): LogicalPlan =
+      SubqueryAlias(parts, df.queryExecution.analyzed)
+    object Columns {
+      def unapply(p: LogicalPlan): Option[Seq[String]] = p match {
+        case UnresolvedRelation(parts, _, _)
+            if InfoSchema.relation(parts).contains("columns") => Some(parts)
+        case _ => None
       }
+    }
+    def columns(parts: Seq[String], cond: Expression): LogicalPlan =
+      named(parts, InfoSchema.build(spark, "columns", InfoSchema.columnsScope(cond)))
+    plan.transformDownWithSubqueries {
+      case w: UnresolvedWith =>
+        w.copy(cteRelations = w.cteRelations.map { case (n, q, d) =>
+          (n, served(spark)(q).asInstanceOf[SubqueryAlias], d)
+        })
+      case e: ExplainCommand => e.copy(logicalPlan = served(spark)(e.logicalPlan))
+      // a view keeps its SQL text, which Spark resolves at read time
+      // without this pass: a temporary view keeps the substituted plan
+      // instead, and a persistent view over a served relation refuses
+      case v: CreateViewCommand =>
+        val query = served(spark)(v.plan)
+        if (query.fastEquals(v.plan)) v else v.copy(originalText = None, plan = query)
+      case v @ (_: CreateView | _: AlterViewAs)
+          if !v.children.forall(c => served(spark)(c).fastEquals(c)) =>
+        throw new IllegalArgumentException(
+          "a persistent view cannot read time travel, branches, metadata " +
+            "tables, information_schema or table_changes: its body resolves " +
+            "without the engine — use a temporary view")
+      case f @ Filter(cond, Columns(parts)) => f.copy(child = columns(parts, cond))
+      case f @ Filter(cond, a @ SubqueryAlias(_, Columns(parts))) =>
+        f.copy(child = a.copy(child = columns(parts, cond)))
+      case r @ UnresolvedRelation(parts, _, _) =>
+        InfoSchema.relation(parts).map(rel => named(parts, InfoSchema.build(spark, rel)))
+          .orElse(MetaSql.relation(parts).map { case (table, rel) =>
+            named(parts, MetaSql.build(spark, table, rel))
+          })
+          .orElse(TimeTravel.branch(parts).map(fork => r.copy(multipartIdentifier = fork)))
+          .getOrElse(r)
+      case tt @ RelationTimeTravel(UnresolvedRelation(parts, _, _), _, _) =>
+        named(parts, TimeTravel.read(spark, parts, tt))
+      case f @ UnresolvedTableValuedFunction(name, args, _) =>
+        TableFunctions.changesCall(name, args)
+          .map(TableFunctions.changes(spark, _).queryExecution.analyzed)
+          .getOrElse(f)
+    }
+  }
 
   /** Result delivery as CSV-with-header — the Trino-CLI `--output-format
     * CSV` shape (seed.sh:9, S12). Distributed write; callers coalesce(1)

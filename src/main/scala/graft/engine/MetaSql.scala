@@ -8,9 +8,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the `$snapshots` → `FOR VERSION AS OF <snapshot_id>` paste is the
   * canonical time-travel workflow). The quoted identifier arrives in
   * Spark dialect as `` `t$snapshots` `` (the wire plane's double quotes
-  * requote through [[TrinoSql]]); the rewrite substitutes a temp view
-  * built driver-side from the manifest store — metadata-file reads
-  * only, zero data I/O, exactly how Iceberg answers these.
+  * requote through [[TrinoSql]]); [[Lakehouse.sql]] resolves the parsed
+  * relation to the plan [[build]] makes driver-side from the manifest
+  * store — metadata-file reads only, zero data I/O, exactly how Iceberg
+  * answers these.
   *
   * Served relations (engine-shaped columns, Trino-named where the
   * concept maps 1:1):
@@ -29,56 +30,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Unversioned tables refuse loudly with the remedy (commit or
   * snapshot first); unknown `$rel` suffixes refuse with the served
-  * list. Occurrences inside single-quoted literals are data. */
+  * list. */
 object MetaSql {
 
-  private val Rx = "`([A-Za-z_][A-Za-z_0-9.]*)\\$([A-Za-z_]+)`".r
+  private val NameRx = "([A-Za-z_][A-Za-z_0-9.]*)\\$([A-Za-z_]+)".r
   private val Served = Set("snapshots", "history", "refs", "files",
     "partitions", "manifests", "properties")
 
-  private def insideLiteral(s: String, pos: Int): Boolean = {
-    var i = 0
-    var in = false
-    while (i < pos && i < s.length) {
-      if (s.charAt(i) == '\'') {
-        if (in && i + 1 < s.length && s.charAt(i + 1) == '\'') i += 1
-        else in = !in
-      }
-      i += 1
+  /** The (table, metadata relation) a parsed multipart name addresses —
+    * its last part spelled `t$rel` — or None for any other name. An
+    * unserved `$rel` refuses loudly. */
+  def relation(parts: Seq[String]): Option[(String, String)] =
+    parts.lastOption.collect { case NameRx(stem, r) =>
+      val rel = r.toLowerCase
+      if (!Served.contains(rel))
+        throw new IllegalArgumentException(
+          s"metadata table $$$rel is not served — available: " +
+            Served.toSeq.sorted.map("$" + _).mkString(", "))
+      ((parts.init :+ stem).mkString("."), rel)
     }
-    in
-  }
 
-  def rewrite(spark: SparkSession, sql: String): String = {
-    if (sql.indexOf('$') < 0) return sql
-    val out = new StringBuilder
-    var last = 0
-    Rx.findAllMatchIn(sql).foreach { m =>
-      if (m.start >= last && !insideLiteral(sql, m.start)) {
-        val (table, rel) = (m.group(1), m.group(2).toLowerCase)
-        if (!Served.contains(rel))
-          throw new IllegalArgumentException(
-            s"metadata table $$$rel is not served — available: " +
-              Served.toSeq.sorted.map("$" + _).mkString(", "))
-        // stem + exact-name hash: sanitization alone maps distinct
-        // tables (`a.b` vs `a_b`) to one view name (the TimeTravel
-        // viewName lesson)
-        val h = java.security.MessageDigest.getInstance("MD5")
-          .digest(table.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          .take(6).map(b => f"$b%02x").mkString
-        val view = "__meta_" + rel + "_" +
-          table.replaceAll("[^A-Za-z0-9_]", "_") + "_" + h
-        build(spark, table, rel).createOrReplaceTempView(view)
-        out ++= sql.substring(last, m.start)
-        out ++= view
-        last = m.end
-      }
-    }
-    out ++= sql.substring(last)
-    out.toString
-  }
-
-  private def build(spark: SparkSession, table: String, rel: String): DataFrame = {
+  /** The metadata relation `rel` of `table`, read from its manifests. */
+  def build(spark: SparkSession, table: String, rel: String): DataFrame = {
     import spark.implicits._
     val root = Manifests.root(spark, table)
     lazy val snaps = {

@@ -2,7 +2,7 @@ package graft.engine
 
 /** Quote-, paren- and CASE-aware scanning over SQL statement text —
   * the shared lexical substrate of the hand-rolled statement routers
-  * ([[MergeSql]], [[DmlSql]], [[TableFunctions]]). No full grammar:
+  * ([[MergeSql]], [[DmlSql]], [[StatementHttp]]). No full grammar:
   * expressions pass through verbatim to Spark's parser, which owns
   * their semantics; these helpers only find STRUCTURAL positions
   * (clause keywords, top-level commas, balanced parens) without being
@@ -54,7 +54,8 @@ private[engine] object SqlScan {
     -1
   }
 
-  /** Split on top-level commas (quote- and paren-aware). */
+  /** Split on top-level commas (quote-, paren- and bracket-aware —
+    * `'a,b', (1+2), ARRAY[1,2]` is three parts). */
   def splitTop(s: String): Seq[String] = {
     val out = Seq.newBuilder[String]
     val cur = new StringBuilder
@@ -71,8 +72,8 @@ private[engine] object SqlScan {
         }
       } else c match {
         case '\'' | '"' | '`' => cur += c; quote = c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
+        case '(' | '[' => depth += 1; cur += c
+        case ')' | ']' => depth -= 1; cur += c
         case ',' if depth == 0 => out += cur.toString.trim; cur.clear()
         case other => cur += other
       }

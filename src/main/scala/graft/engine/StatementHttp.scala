@@ -189,6 +189,8 @@ object StatementHttp {
   private val ExecuteImmediateRx =
     "(?is)^EXECUTE\\s+IMMEDIATE\\s+'((?:[^']|'')*)'(?:\\s+USING\\s+(.+))?\\s*;?\\s*$".r
   private val DeallocateRx = "(?is)^DEALLOCATE\\s+PREPARE\\s+([A-Za-z_]\\w*)\\s*;?\\s*$".r
+  private val ShowSessionRx =
+    "(?is)^\\s*SHOW\\s+SESSION(?:\\s+LIKE\\s+'((?:[^']|'')*)')?\\s*;?\\s*$".r
 
   /** Substitute `?` parameter markers OUTSIDE quoted spans with the
     * USING expressions, positionally — Trino's EXECUTE parameter
@@ -220,37 +222,6 @@ object StatementHttp {
       throw new IllegalArgumentException(
         s"too many parameters: ${args.length} supplied, $next markers")
     out.toString
-  }
-
-  /** Split a USING argument list on TOP-LEVEL commas (quote-, paren-
-    * and bracket-aware — `EXECUTE q USING 'a,b', (1+2), ARRAY[1,2]`
-    * is three args). */
-  private[engine] def splitArgs(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        cur += c
-        if (c == quote) {
-          if (i + 1 < s.length && s.charAt(i + 1) == quote) { cur += quote; i += 1 }
-          else quote = 0
-        }
-      } else c match {
-        case '\'' | '"' | '`' => cur += c; quote = c
-        case '(' | '[' => depth += 1; cur += c
-        case ')' | ']' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.toString.trim; cur.clear()
-        case _ => cur += c
-      }
-      i += 1
-    }
-    val last = cur.toString.trim
-    if (last.nonEmpty) out += last
-    out.result()
   }
 
   /** Parse the `X-Trino-Session` header (comma-separated `k=v` pairs,
@@ -424,8 +395,6 @@ object StatementHttp {
     // the answer is per-query-state, so it must come from `q`, not from
     // the shared Spark conf (another client's temporary override must
     // never show here). Pure read side: no lock, no mutation.
-    val ShowSessionRx =
-      "(?is)^\\s*SHOW\\s+SESSION(?:\\s+LIKE\\s+'((?:[^']|'')*)')?\\s*;?\\s*$".r
     ShowSessionRx.findFirstMatchIn(sqlText).foreach { m =>
       import spark.implicits._
       val joinDist = q.session.getOrElse("join_distribution_type", "AUTOMATIC")
@@ -544,7 +513,7 @@ object StatementHttp {
             q.schema = StructType(Seq(StructField("result", BooleanType)))
           case ExecuteImmediateRx(text, usingRaw) =>
             val args = Option(usingRaw)
-              .map(u => splitArgs(u.trim.stripSuffix(";")))
+              .map(u => SqlScan.splitTop(u.trim.stripSuffix(";")))
               .getOrElse(Seq.empty)
             runStatement(spark, q,
               bindParameters(text.replace("''", "'"), args), maxRows, reg)
@@ -556,7 +525,7 @@ object StatementHttp {
             // strip it here, never inside a quoted final argument
             // (a quoted arg ends in its quote, not `;`)
             val args = Option(usingRaw)
-              .map(u => splitArgs(u.trim.stripSuffix(";")))
+              .map(u => SqlScan.splitTop(u.trim.stripSuffix(";")))
               .getOrElse(Seq.empty)
             runStatement(spark, q, bindParameters(text, args), maxRows, reg)
           case UseRx(cat, sch) =>

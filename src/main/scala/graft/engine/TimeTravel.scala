@@ -1,6 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.RelationTimeTravel
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.types.StringType
 
 /** SQL-surface time travel (VERDICT r15 #4): the Nessie-versioned
   * catalog the reference configures (`/root/reference/compose/trino/
@@ -10,48 +13,41 @@ import org.apache.spark.sql.SparkSession
   *
   *   - `SELECT ... FROM tbl FOR VERSION AS OF 'tag'` — Trino's Iceberg
   *     time-travel clause; resolves through [[Layout.readAt]] (manifest
-  *     file list + schema — no live-catalog dependency), registered as
-  *     a temp view and substituted into the statement, so the rest of
-  *     the query plans over the pinned snapshot like any relation.
+  *     file list + schema — no live-catalog dependency). The bare
+  *     numeric form `FOR VERSION AS OF 5` names a commit sequence
+  *     ([[Layout.readAtSeq]]) — what `SELECT snapshot_id FROM
+  *     "t$snapshots"` workflows paste.
   *   - `FROM tbl FOR TIMESTAMP AS OF '2026-01-01 00:00:00'` — the
   *     wall-clock variant; [[Layout.readAsOf]] resolves the LATEST
   *     committed snapshot at or before the instant (UTC — the engine's
   *     fixed session zone; bare dates and raw epoch-millis also parse).
   *   - `FROM "tbl@branch"` — the Nessie ref-qualified identifier;
-  *     rewrites to the branch's writable fork table
-  *     (`tbl__branch_branch`, [[Layout.createBranch]]'s registration).
+  *     names the branch's writable fork table (`tbl__branch_branch`,
+  *     [[Layout.createBranch]]'s registration).
   *
-  * All rewrites are QUOTE-AWARE (occurrences inside single-quoted
-  * string literals are data, not syntax) and strict: an unknown table,
-  * tag, or pre-history instant fails loudly in [[Layout.readAt]]/
-  * [[Layout.readAsOf]] — never a silent fallback to the live table,
-  * which would hand a user CURRENT rows while they asked for pinned
-  * ones. Statements without any spelling pass
-  * through untouched (three regex probes). Plumbed into
-  * [[Lakehouse.sql]], so the API plane AND the wire front
-  * ([[StatementHttp]] routes through Lakehouse.sql) share one path. */
+  * Spark's parser turns each spelling into a relation node, and
+  * [[Lakehouse.sql]] substitutes the pinned read for it, so the rest of
+  * the query plans over the pinned snapshot like any relation and a
+  * spelling inside a string literal is data. Resolution is strict: an
+  * unknown table, tag, or pre-history instant fails loudly in
+  * [[Layout.readAt]]/[[Layout.readAsOf]] — never a silent fallback to
+  * the live table, which would hand a user CURRENT rows while they
+  * asked for pinned ones. Plumbed into [[Lakehouse.sql]], so the API
+  * plane AND the wire front ([[StatementHttp]] routes through
+  * Lakehouse.sql) share one path. */
 object TimeTravel {
 
-  // the table leg accepts BACKTICKED identifiers too (round-16 judge:
-  // a quoted table silently skipped the rewrite and died later in
-  // Spark's parser with a confusing error) — [[normalizeTable]] unwraps
-  // plain quoted names and refuses special-character ones LOUDLY
-  private val TableP =
-    "((?:`[^`]+`|[A-Za-z_][A-Za-z_0-9]*)(?:\\.(?:`[^`]+`|[A-Za-z_][A-Za-z_0-9]*))*)"
-  private val VersionRx =
-    ("(?i)" + TableP + "\\s+FOR\\s+VERSION\\s+AS\\s+OF\\s+'([^']*)'").r
-  // Trino Iceberg's NUMERIC snapshot-id spelling (unquoted bigint —
-  // what `SELECT snapshot_id FROM "t$snapshots"` workflows paste)
-  private val VersionSeqRx =
-    ("(?i)" + TableP + "\\s+FOR\\s+VERSION\\s+AS\\s+OF\\s+(\\d+)").r
-  private val TimestampRx =
-    ("(?i)" + TableP + "\\s+FOR\\s+TIMESTAMP\\s+AS\\s+OF\\s+'([^']*)'").r
-  // backticked form — in SPARK dialect text `"a@b"` is a string
-  // literal, so the ref-qualified identifier spelling here is
-  // `` `tbl@branch` `` (the wire plane's Trino `"tbl@branch"` arrives
-  // as this after TrinoSql's identifier requoting)
-  private val BranchRx =
-    "`([A-Za-z_][A-Za-z_0-9.]*)@([A-Za-z_][A-Za-z_0-9]*)`".r
+  private val PlainLeg = "[A-Za-z_][A-Za-z_0-9]*"
+  private val BranchRx = "([A-Za-z_][A-Za-z_0-9.]*)@([A-Za-z_][A-Za-z_0-9]*)".r
+
+  /** The fork table a parsed multipart name addresses when its last part
+    * is spelled `tbl@branch` (in Spark dialect the backticked
+    * `` `tbl@branch` `` — the wire plane's Trino `"tbl@branch"` arrives
+    * as this after TrinoSql's identifier requoting), or None. */
+  def branch(parts: Seq[String]): Option[Seq[String]] =
+    parts.lastOption.collect { case BranchRx(t, b) =>
+      parts.init ++ s"${t}__branch_$b".split('.')
+    }
 
   /** Parse a `FOR TIMESTAMP AS OF` literal to epoch millis: ISO-ish
     * `yyyy-MM-dd HH:mm:ss[.SSS]` (UTC — the engine's fixed session
@@ -66,109 +62,42 @@ object TimeTravel {
       .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
   }
 
-  /** True when `pos` sits inside a quoted span of Spark-dialect `s` —
-    * single-quoted string, double-quoted string (Spark's default
-    * dialect), or backticked identifier; each escapes its own quote by
-    * doubling. Tracking all three is what keeps a `FOR VERSION AS OF`
-    * or `@` spelling inside ANY literal kind data, not syntax
-    * (round-16 review: the single-quote-only walker rewrote
-    * double-quoted Spark string literals). */
-  private def insideQuote(s: String, pos: Int): Boolean = {
-    var i = 0
-    var quote: Char = 0
-    while (i < pos && i < s.length) {
-      val c = s.charAt(i)
-      if (quote == 0) {
-        if (c == '\'' || c == '"' || c == '`') quote = c
-      } else if (c == quote) {
-        if (i + 1 < s.length && s.charAt(i + 1) == quote) i += 1
-        else quote = 0
-      }
-      i += 1
-    }
-    quote != 0
-  }
-
-  private def replaceOutsideQuotes(s: String, rx: scala.util.matching.Regex)(
-      f: scala.util.matching.Regex.Match => String): String = {
-    val out = new StringBuilder
-    var last = 0
-    rx.findAllMatchIn(s).foreach { m =>
-      if (m.start >= last && !insideQuote(s, m.start)) {
-        out ++= s.substring(last, m.start)
-        out ++= f(m)
-        last = m.end
-      }
-    }
-    out ++= s.substring(last)
-    out.toString
-  }
-
-  /** Collision-proof view name: the sanitized human-readable stem PLUS
-    * an md5 of the exact (table, ref) pair — sanitization alone mapped
-    * distinct pairs (tag `v.1` vs `v_1`; table `a_b`+tag `c` vs `a`+
-    * `b_c`) to ONE name, silently aliasing two pinned reads in a
-    * statement to the same snapshot (round-16 review). Deterministic,
-    * so repeated reads of one ref reuse the registration. */
-  private def viewName(prefix: String, table: String, ref: String): String = {
-    val stem = (prefix + table + "_" + ref).replaceAll("[^A-Za-z0-9_]", "_")
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest((table + "\u0000" + ref)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(6).map(b => f"$b%02x").mkString
-    stem + "_" + h
-  }
-
-  private val PlainLeg = "[A-Za-z_][A-Za-z_0-9]*"
-
-  /** Unwrap backticked legs of a captured table chain to the plain
-    * manifest-addressable name. A leg that is only QUOTED (`` `events`
-    * `` → `events`) unwraps; a leg needing quoting (spaces, dashes …)
-    * REFUSES loudly — manifests address tables by plain identifier, and
-    * silently skipping the rewrite would hand the user Spark's
-    * confusing downstream parser error instead (round-16 judge). */
-  private def normalizeTable(raw: String): String =
-    "`[^`]+`|[A-Za-z_][A-Za-z_0-9]*".r.findAllIn(raw).map { leg =>
-      val inner =
-        if (leg.startsWith("`")) leg.substring(1, leg.length - 1) else leg
-      if (!inner.matches(PlainLeg))
+  /** The plain manifest-addressable name of a parsed table chain (a
+    * branch leg already resolved to its fork). A leg that needs quoting
+    * (spaces, dashes …) REFUSES loudly — manifests address tables by
+    * plain identifier, and passing it on would hand the user Spark's
+    * confusing downstream error instead. */
+  private def plainTable(parts: Seq[String]): String =
+    branch(parts).getOrElse(parts).map { leg =>
+      if (!leg.matches(PlainLeg))
         throw new IllegalArgumentException(
-          s"time travel over quoted identifier `$inner` is not supported: " +
+          s"time travel over quoted identifier `$leg` is not supported: " +
             "manifest-addressed tables use plain identifiers " +
             "([A-Za-z_][A-Za-z_0-9]*)")
-      inner
+      leg
     }.mkString(".")
 
-  /** Rewrite the ref-addressed spellings; a no-op (same string) for
-    * statements containing none. */
-  def rewrite(spark: SparkSession, sql: String): String = {
-    var s = sql
-    if (s.indexOf('@') >= 0)
-      s = replaceOutsideQuotes(s, BranchRx) { m =>
-        s"${m.group(1)}__branch_${m.group(2)}"
-      }
-    if (VersionRx.findFirstIn(s).isDefined)
-      s = replaceOutsideQuotes(s, VersionRx) { m =>
-        val (table, tag) = (normalizeTable(m.group(1)), m.group(2))
-        val view = viewName("__tt_", table, tag)
-        Layout.readAt(spark, table, tag).createOrReplaceTempView(view)
-        view
-      }
-    if (VersionSeqRx.findFirstIn(s).isDefined)
-      s = replaceOutsideQuotes(s, VersionSeqRx) { m =>
-        val (table, seq) = (normalizeTable(m.group(1)), m.group(2).toLong)
-        val view = viewName("__tv_", table, seq.toString)
-        Layout.readAtSeq(spark, table, seq).createOrReplaceTempView(view)
-        view
-      }
-    if (TimestampRx.findFirstIn(s).isDefined)
-      s = replaceOutsideQuotes(s, TimestampRx) { m =>
-        val (table, lit) = (normalizeTable(m.group(1)), m.group(2))
-        val ms = parseTs(lit)
-        val view = viewName("__ts_", table, ms.toString)
-        Layout.readAsOf(spark, table, ms).createOrReplaceTempView(view)
-        view
-      }
-    s
+  /** The pinned read a parsed `FOR VERSION|TIMESTAMP AS OF` clause over
+    * the table `parts` names. The parser hands a quoted tag `'5'` and a
+    * bare snapshot id `5` over as the same version string, so the
+    * clause's source text keeps Trino's rule: quoted names a ref, bare
+    * names a commit sequence. */
+  def read(spark: SparkSession, parts: Seq[String],
+      clause: RelationTimeTravel): DataFrame = {
+    val table = plainTable(parts)
+    val o = clause.origin
+    val quoted = o.sqlText.zip(o.stopIndex).exists { case (s, i) =>
+      s.charAt(i) == '\'' || s.charAt(i) == '"'
+    }
+    (clause.timestamp, clause.version) match {
+      case (None, Some(tag)) if quoted => Layout.readAt(spark, table, tag)
+      case (None, Some(seq)) => Layout.readAtSeq(spark, table, seq.toLong)
+      case (Some(Literal(instant, _: StringType)), None) =>
+        Layout.readAsOf(spark, table, parseTs(instant.toString))
+      case _ =>
+        throw new IllegalArgumentException(
+          "FOR TIMESTAMP AS OF takes a quoted instant: " +
+            "'yyyy-MM-dd HH:mm:ss', a date, or epoch millis")
+    }
   }
 }

@@ -460,7 +460,7 @@ class PlanQualitySpec extends SparkSpec {
     }
     // round-17 SQL surfaces: the CDC feed's per-step generators are
     // pruned manifest scans + broadcast semi-joins (the q266 aggregate
-    // plans THROUGH the changelog temp view, so its joins are in this
+    // plans THROUGH the changelog relation, so its joins are in this
     // plan), and MERGE INTO's kept/insert sides are equi-joins on the
     // ON keys — none may degrade to nested-loop/cartesian (a changelog
     // over a wide window or a merge against a large source would go

@@ -64,12 +64,39 @@ class InfoSchemaSpec extends SparkSpec {
         s"WHERE table_schema = '$db' AND table_type = 'VIEW'")
       .as[String].collect().toSeq
     assert(views === Seq("v1"))
-    // temp views are NOT catalog objects (Trino's contract) — the shim's
-    // own registrations must never list themselves
+    // temp views are NOT catalog objects (Trino's contract), and no
+    // served spelling registers one: the session's temp views are the
+    // same after one statement of each
+    val t = freshName("info_tv_")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.saveAsTable(t)
+    Layout.snapshot(spark, t, "v1")
+    val seq1 = Manifests.loadRefs(Manifests.root(spark, t)).tags("v1")
+    Seq((3L, "c")).toDF("id", "v").write.mode("append").saveAsTable(t)
+    Layout.snapshot(spark, t, "v2")
+    val seq2 = Manifests.loadRefs(Manifests.root(spark, t)).tags("v2")
+    Layout.createBranch(spark, t, "etl")
+    val commits = Manifests.listSnapshots(Manifests.root(spark, t)).size.toLong
+    def temps() = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val before = temps()
+    val counts = Seq(
+      "SELECT count(*) FROM information_schema.tables",
+      s"SELECT count(*) FROM $t FOR VERSION AS OF 'v1'",
+      s"SELECT count(*) FROM $t FOR VERSION AS OF $seq1",
+      s"SELECT count(*) FROM $t FOR TIMESTAMP AS OF '${System.currentTimeMillis()}'",
+      s"SELECT count(*) FROM `$t$$snapshots`",
+      s"SELECT count(*) FROM `$t@etl`",
+      s"SELECT count(*) FROM TABLE(system.table_changes('default', '$t', $seq1, $seq2))",
+      // two reads pinned to the same tag: duplicate relations resolve
+      s"""SELECT count(*) FROM $t FOR VERSION AS OF 'v1' a
+         |JOIN $t FOR VERSION AS OF 'v1' b ON a.id = b.id""".stripMargin)
+      .map(q => Lakehouse.sql(spark, q).collect().head.getLong(0))
+    assert(counts.drop(1) === Seq(2L, 2L, 3L, commits, 3L, 1L, 2L))
+    assert(temps() === before)
     val all = Lakehouse.sql(spark,
       "SELECT table_name FROM information_schema.tables")
       .as[String].collect().toSeq
-    assert(!all.exists(_.startsWith("__info_schema")))
+    assert(!all.exists(_.startsWith("__")))
     spark.sql(s"DROP DATABASE $db CASCADE")
   }
 
@@ -120,8 +147,8 @@ class InfoSchemaSpec extends SparkSpec {
     assert(got === Seq("a"))
     assert(InfoSchema.lastColumnsWalk === 1,
       s"dialect shape must scope to one table, walked ${InfoSchema.lastColumnsWalk}")
-    // an OR makes equality literals non-conjunctive → FULL walk, and
-    // the result still carries rows outside any single scope
+    // an OR makes the table_name equalities non-conjunctive → no table
+    // scope, and the result still carries rows outside any single table
     val both = Lakehouse.sql(spark,
       s"""SELECT column_name FROM information_schema.columns
          |WHERE table_schema = '$db' AND
@@ -129,14 +156,32 @@ class InfoSchemaSpec extends SparkSpec {
          |ORDER BY column_name""".stripMargin).as[String].collect().toSeq
     assert(both === Seq("a", "b"))
     assert(InfoSchema.lastColumnsWalk > 1, "OR must disable scoping")
-    // a QUALIFIED column could name another join relation → no scope
-    assert(InfoSchema.columnsScope(
-      "SELECT * FROM information_schema.columns c JOIN x ON " +
-        "c.table_name = x.n WHERE x.table_name = 'o'") === ((None, None)))
-    // a longer identifier is not the scoping column
-    assert(InfoSchema.columnsScope(
-      "SELECT * FROM information_schema.columns WHERE my_table_name = 'z'")
-      === ((None, None)))
+    // a QUALIFIED column could name another relation → no scope, even
+    // when it happens to name this one
+    val qualified = Lakehouse.sql(spark,
+      s"""SELECT column_name FROM information_schema.columns c
+         |WHERE c.table_schema = '$db' AND c.table_name = 'one'""".stripMargin)
+      .as[String].collect().toSeq
+    assert(qualified === Seq("a"))
+    assert(InfoSchema.lastColumnsWalk > 1, "a qualified column must disable scoping")
+    // a JOIN: the equality on the OTHER relation's table_name must not
+    // scope the columns relation
+    spark.sql(s"CREATE TABLE $db.names (n STRING, table_name STRING) USING parquet")
+    spark.sql(s"INSERT INTO $db.names VALUES ('two', 'one')")
+    val joined = Lakehouse.sql(spark,
+      s"""SELECT c.column_name FROM information_schema.columns c
+         |JOIN $db.names x ON c.table_name = x.n AND c.table_schema = '$db'
+         |WHERE x.table_name = 'one'""".stripMargin).as[String].collect().toSeq
+    assert(joined === Seq("b"))
+    assert(InfoSchema.lastColumnsWalk > 1, "a JOIN must disable scoping")
+    // a longer identifier carrying the literal is not the scoping column
+    val longer = Lakehouse.sql(spark,
+      s"""SELECT column_name FROM (SELECT column_name, table_schema,
+         |  table_name AS my_table_name FROM information_schema.columns)
+         |WHERE table_schema = '$db' AND my_table_name = 'one'""".stripMargin)
+      .as[String].collect().toSeq
+    assert(longer === Seq("a"))
+    assert(InfoSchema.lastColumnsWalk > 1, "a longer identifier must not scope")
     spark.sql(s"DROP DATABASE $db CASCADE")
   }
 
@@ -209,15 +254,54 @@ class InfoSchemaSpec extends SparkSpec {
     spark.sql(s"DROP DATABASE $db CASCADE")
   }
 
+  test("concurrent get_columns calls on one session each answer their own table") {
+    val db = freshName("infodb_")
+    spark.sql(s"CREATE DATABASE $db")
+    spark.sql(s"CREATE TABLE $db.t1 (a INT, b INT) USING parquet")
+    spark.sql(s"CREATE TABLE $db.t2 (x STRING, y STRING, z STRING) USING parquet")
+    def cols(t: String): Seq[String] = Lakehouse.sql(spark,
+      "SELECT column_name FROM information_schema.columns " +
+        s"WHERE table_schema='$db' AND table_name='$t'")
+      .as[String].collect().toSeq
+    val expected = Seq("t1", "t2").map(t => t -> cols(t)).toMap
+    assert(expected("t1") === Seq("a", "b") && expected("t2") === Seq("x", "y", "z"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val wrong = new java.util.concurrent.atomic.AtomicInteger()
+    try {
+      val calls = (0 until 4).map { i =>
+        pool.submit(new Runnable {
+          def run(): Unit = (0 until 60).foreach { j =>
+            val t = if ((i + j) % 2 == 0) "t1" else "t2"
+            val ok = try cols(t) == expected(t)
+              catch { case scala.util.control.NonFatal(_) => false }
+            if (!ok) wrong.incrementAndGet()
+          }
+        })
+      }
+      calls.foreach(_.get())
+    } finally pool.shutdown()
+    assert(wrong.get === 0, s"${wrong.get} of 240 concurrent calls answered wrong")
+    spark.sql(s"DROP DATABASE $db CASCADE")
+  }
+
   test("unserved relations refuse loudly; references inside literals are data") {
     val e = intercept[IllegalArgumentException] {
       Lakehouse.sql(spark, "SELECT * FROM information_schema.parameters")
     }
     assert(e.getMessage.contains("not served"))
-    val lit = "SELECT 'see information_schema.columns' AS s"
-    assert(InfoSchema.rewrite(spark, lit) === lit)
-    // a longer identifier containing the name is NOT a reference
-    val other = "SELECT * FROM my_information_schema.columns"
-    assert(InfoSchema.rewrite(spark, other) === other)
+    // a reference inside a literal is data: nothing is built
+    InfoSchema.lastColumnsWalk = -1
+    val lit = Lakehouse.sql(spark, "SELECT 'see information_schema.columns' AS s")
+    assert(lit.as[String].collect().toSeq === Seq("see information_schema.columns"))
+    assert(InfoSchema.lastColumnsWalk === -1)
+    // a longer identifier containing the name is NOT a reference: it
+    // reads the real table
+    val db = freshName("my_information_schema_")
+    spark.sql(s"CREATE DATABASE $db")
+    spark.sql(s"CREATE TABLE $db.columns (v STRING) USING parquet")
+    spark.sql(s"INSERT INTO $db.columns VALUES ('own')")
+    assert(Lakehouse.sql(spark, s"SELECT v FROM $db.columns")
+      .as[String].collect().toSeq === Seq("own"))
+    spark.sql(s"DROP DATABASE $db CASCADE")
   }
 }

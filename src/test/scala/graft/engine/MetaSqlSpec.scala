@@ -102,8 +102,8 @@ class MetaSqlSpec extends SparkSpec {
       Lakehouse.sql(spark, s"SELECT * FROM `$t$$bogus`")
     }
     assert(e2.getMessage.contains("not served"))
-    val lit = "SELECT 'see `t$snapshots` here' AS s"
-    assert(MetaSql.rewrite(spark, lit) === lit)
+    val lit = Lakehouse.sql(spark, "SELECT 'see `t$snapshots` here' AS s")
+    assert(lit.as[String].collect().toSeq === Seq("see `t$snapshots` here"))
   }
 
   test("$manifests reports per-commit added/existing splits; $properties " +

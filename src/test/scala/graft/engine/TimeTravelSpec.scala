@@ -25,6 +25,26 @@ class TimeTravelSpec extends SparkSpec {
     val live = Lakehouse.sql(spark, s"SELECT count(*) FROM $t")
       .collect().head.getLong(0)
     assert(live === 3L)
+    // the pinned relation resolves inside a CTE body and under EXPLAIN
+    val cte = Lakehouse.sql(spark,
+      s"WITH p AS (SELECT id FROM $t FOR VERSION AS OF 'v1') SELECT count(*) FROM p")
+      .collect().head.getLong(0)
+    assert(cte === 2L)
+    val plan = Lakehouse.sql(spark,
+      s"EXPLAIN SELECT id FROM $t FOR VERSION AS OF 'v1'").collect().head.getString(0)
+    assert(plan.contains("Physical Plan") && !plan.contains("Error"), plan)
+    // a temporary view keeps the pinned plan; a persistent view, whose
+    // text Spark would resolve without the engine, refuses
+    Lakehouse.sql(spark,
+      s"CREATE OR REPLACE TEMPORARY VIEW ${t}_pin AS SELECT id FROM $t FOR VERSION AS OF 'v1'")
+    Seq((4L, "d")).toDF("id", "v").write.mode("append").saveAsTable(t)
+    assert(Lakehouse.sql(spark, s"SELECT count(*) FROM ${t}_pin")
+      .collect().head.getLong(0) === 2L)
+    spark.catalog.dropTempView(s"${t}_pin")
+    val e = intercept[IllegalArgumentException] {
+      Lakehouse.sql(spark, s"CREATE VIEW ${t}_v AS SELECT id FROM $t FOR VERSION AS OF 'v1'")
+    }
+    assert(e.getMessage.contains("persistent view"))
   }
 
   test("time-travelled relation composes with joins/aggregates in the statement") {
@@ -123,7 +143,6 @@ class TimeTravelSpec extends SparkSpec {
 
   test("spellings inside string literals are data, not syntax") {
     val s1 = "SELECT 'x FOR VERSION AS OF ''v9''' AS lit1, '`a@b`' AS lit2"
-    assert(TimeTravel.rewrite(spark, s1) === s1)
     val got = Lakehouse.sql(spark, s1).collect().head
     assert(got.getString(0) === "x FOR VERSION AS OF 'v9'")
     assert(got.getString(1) === "`a@b`")
@@ -131,7 +150,6 @@ class TimeTravelSpec extends SparkSpec {
     // data too (round-16 review: the single-quote-only walker rewrote
     // it into a branch-table identifier and broke the statement)
     val s2 = "SELECT \"bob@gmail\" AS email"
-    assert(TimeTravel.rewrite(spark, s2) === s2)
     assert(Lakehouse.sql(spark, s2).collect().head.getString(0) === "bob@gmail")
   }
 
@@ -160,14 +178,14 @@ class TimeTravelSpec extends SparkSpec {
 
   test("a quoted identifier needing quoting refuses loudly, never a confusing downstream error") {
     // round-16 judge: `my table` FOR VERSION AS OF silently skipped the
-    // rewrite and died in Spark's parser; now the rewrite itself refuses
+    // rewrite and died in Spark's parser; now resolution itself refuses
     val e = intercept[IllegalArgumentException] {
-      TimeTravel.rewrite(spark,
+      Lakehouse.sql(spark,
         "SELECT * FROM `my table` FOR VERSION AS OF 'v1'")
     }
     assert(e.getMessage.contains("plain identifiers"))
     val e2 = intercept[IllegalArgumentException] {
-      TimeTravel.rewrite(spark,
+      Lakehouse.sql(spark,
         "SELECT * FROM `t-dash` FOR TIMESTAMP AS OF '1700000000000'")
     }
     assert(e2.getMessage.contains("plain identifiers"))
@@ -181,5 +199,11 @@ class TimeTravelSpec extends SparkSpec {
       Lakehouse.sql(spark, s"SELECT * FROM $t FOR VERSION AS OF 'nope'")
     }
     assert(e.getMessage.contains("unknown snapshot tag"))
+    // a QUOTED number names a tag, never the commit sequence it spells
+    val seq = Manifests.loadRefs(Manifests.root(spark, t)).tags("v1")
+    val e2 = intercept[Exception] {
+      Lakehouse.sql(spark, s"SELECT * FROM $t FOR VERSION AS OF '$seq'")
+    }
+    assert(e2.getMessage.contains("unknown snapshot tag"))
   }
 }
